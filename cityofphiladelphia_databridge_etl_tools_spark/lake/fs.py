@@ -1,15 +1,21 @@
-"""Filesystem abstraction for the metadata layer.
+"""Driver-side filesystem abstraction for a lake table.
 
-The table's DATA path (parquet files) already goes through Spark's
-Hadoop filesystems — any ``s3a://`` / ``gs://`` / ``abfss://`` root
-works for the data reads and writes without this module. The METADATA
-path (the append-only commit log) needs three primitives Spark does
-not expose to the driver:
+The contract splits by who touches what:
 
-1. atomic create-if-absent — the CAS commit point (one winner per
-   log position);
-2. atomic replace — advisory hint files;
-3. listing + stat — log recovery and orphan GC.
+- Spark reads and writes the DATA (parquet files) through its Hadoop
+  filesystems — any ``s3a://`` / ``gs://`` / ``abfss://`` root.
+- :class:`FileSystem` lists and deletes data by PREFIX: the
+  just-written snapshot listing that becomes manifest entries, orphan
+  GC and dead-letter expiry. Data paths never get a directory probe
+  (``exists``/``is_file`` on a directory): an object store has no
+  directories and answers "absent".
+- :class:`FileSystem` owns the METADATA (the append-only commit log),
+  which needs primitives Spark does not expose to the driver:
+
+  1. atomic create-if-absent — the CAS commit point (one winner per
+     log position);
+  2. atomic replace — advisory hint files;
+  3. listing + stat — log recovery.
 
 :class:`LocalFS` implements them with POSIX semantics (hard-link
 create-exclusive, ``os.replace``). An object-store implementation maps
@@ -28,8 +34,9 @@ import time
 
 
 class FileSystem:
-    """Driver-side metadata I/O. Paths are plain strings; the data
-    plane (Spark reads/writes) never goes through this interface."""
+    """Driver-side metadata I/O plus prefix listing/deletion of data
+    files (see the module docstring). Paths are plain strings; Spark
+    does every data read and write."""
 
     def exists(self, path: str) -> bool:
         raise NotImplementedError

@@ -89,11 +89,3 @@ def coerce_to(df: DataFrame, schema: T.StructType) -> DataFrame:
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return df.select(*cols)
-
-
-def apply_column_mappings(df: DataFrame, mappings: dict[str, str]) -> DataFrame:
-    """Rename incoming-stream columns per a mapping dict — the
-    reference's --column_mappings step (postgres/postgres.py:203-228),
-    plus its header sanitization is in operators.transforms."""
-    present = {k: v for k, v in mappings.items() if k in df.columns}
-    return df.withColumnsRenamed(present) if present else df

@@ -29,10 +29,15 @@ Scale behavior: buckets bound the unit of rewrite; hot conversations
 are salted across writers inside a bucket; files are written sorted by
 key so parquet min/max stats support row-group skipping; AQE handles
 residual shuffle skew. Metadata cost per commit is O(batch), not
-O(table) — see lake/manifest.py. Per-file stats (rows, order-column
-min/max) come from a distributed one-column scan of the just-written
-files, not driver-side footer reads, so any Hadoop-compatible root
-works.
+O(table) — see lake/manifest.py.
+
+Every write (merge, compaction, refresh, rebucket) becomes manifest
+entries through ONE path, :meth:`LakeTable._write_snapshot`: an
+Observation riding the write job supplies row counts and order/stats
+bounds, and one prefix listing of the write's private snapshot
+directory supplies the file names. Only layout rewrites
+(``compact(sort_by=…)``/``compact(zorder_by=…)``) pay an extra scan
+for exact per-file bounds.
 """
 
 from __future__ import annotations
@@ -40,8 +45,8 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from functools import reduce
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -69,6 +74,9 @@ BASE, DELTA = "base", "delta"
 # tombstone-GC horizon meaning "all tombstones purged, no lsn bound
 # known" (bare gc_tombstones on a table with no integer watermarks)
 GC_ALL_SENTINEL = 2**62
+# write tasks per bucket: a hot key spreads over this many writers
+# (merge_batch's n_salt default; compaction and full rewrites use it)
+N_SALT = 4
 
 
 def _with_deleted(schema: T.StructType) -> T.StructType:
@@ -237,9 +245,6 @@ class LakeTable:
         ``include_deleted=True`` semantics for superseded versions;
         the ``include_deleted`` flag still filters tombstone rows."""
         m = manifest or self.manifest
-        current = self.schema(m)
-        stored_current = _with_deleted(current)
-
         wanted = {str(b) for b in buckets} if buckets is not None else None
         # split buckets into delta-bearing (need LWW resolve) and
         # base-only (stream straight through, no window): after
@@ -261,46 +266,60 @@ class LakeTable:
                     continue
                 target.setdefault(e[1], []).append(os.path.join(self.store.root, e[0]))
 
-        def read_groups(groups):
-            parts = []
-            for sv, paths in sorted(groups.items()):
-                # read each file group with the exact schema it was
-                # written under, then coerce — deterministic add-column
-                # (null-fill) and widening (cast) with no reliance on
-                # reader-side type promotion.
-                stored = _with_deleted(self._schema_at(m, sv))
-                part = self.spark.read.schema(stored).parquet(*paths)
-                parts.append(coerce_to(part, stored_current))
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            return df
-
-        if not resolve_groups and not plain_groups:
-            df = self.spark.createDataFrame([], stored_current)
-        elif not resolve:
-            merged_groups = dict(plain_groups)
+        if not resolve:
             for sv, paths in resolve_groups.items():
-                merged_groups[sv] = merged_groups.get(sv, []) + paths
-            df = read_groups(merged_groups)
+                plain_groups[sv] = plain_groups.get(sv, []) + paths
+            df = self._scan(m, plain_groups)
         elif not resolve_groups:
-            df = read_groups(plain_groups)
+            df = self._scan(m, plain_groups)
         else:
             df = dedup_last_writer(
-                read_groups(resolve_groups), m.key_columns, m.order_columns
+                self._scan(m, resolve_groups), m.key_columns, m.order_columns
             )
             if plain_groups:
-                df = df.unionByName(read_groups(plain_groups))
+                df = df.unionByName(self._scan(m, plain_groups))
         if include_deleted:
             return df
         return df.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
+
+    def _scan(self, m: Manifest, groups: dict[int, list[str]]) -> DataFrame:
+        """Union of file groups keyed by schema version. Each group is
+        read with the exact schema it was written under, then coerced
+        to the current one — deterministic add-column (null-fill) and
+        widening (cast) with no reliance on reader-side type
+        promotion. No groups → an empty frame of the current schema."""
+        stored_current = _with_deleted(self.schema(m))
+        parts = [
+            coerce_to(
+                self.spark.read.schema(_with_deleted(self._schema_at(m, sv))).parquet(*paths),
+                stored_current,
+            )
+            for sv, paths in sorted(groups.items())
+        ]
+        if not parts:
+            return self.spark.createDataFrame([], stored_current)
+        return reduce(DataFrame.unionByName, parts)
+
+    def _evolve(
+        self, m: Manifest, payload: T.StructType
+    ) -> tuple[T.StructType, list[SchemaVersion], int]:
+        """Schema evolution for an incoming payload shape. Returns the
+        table schema after the write, the SchemaVersion to add (empty
+        when unchanged) and the version the new files are written
+        under."""
+        current = self.schema(m)
+        new_schema = evolve_schema(current, payload)
+        if new_schema.json() == current.json():
+            return current, [], m.schema_versions[-1].version
+        added = SchemaVersion(len(m.schema_versions), new_schema.json(), MetaStore.now())
+        return new_schema, [added], added.version
 
     # ---------------------------------------------------------------- merge
     def merge_batch(
         self,
         changes: DataFrame,
         batch_id: str,
-        n_salt: int = 4,
+        n_salt: int = N_SALT,
         mode: str = "mor",
         compact_threshold: int = 16,
         max_auto_compact_buckets: int = 4,
@@ -388,18 +407,9 @@ class LakeTable:
         changes = changes.withColumn("_bad", bad_cond)
 
         # -- schema evolution on the incoming payload shape
-        payload_schema = T.StructType(
-            [f for f in changes.schema.fields if f.name not in (OP_COL, "_bad")]
+        current, schema_added, current_version = self._evolve(
+            m, T.StructType([f for f in changes.schema.fields if f.name not in (OP_COL, "_bad")])
         )
-        current = self.schema(m)
-        new_schema = evolve_schema(current, payload_schema)
-        schema_added: list[SchemaVersion] = []
-        if new_schema.json() != current.json():
-            schema_added = [
-                SchemaVersion(len(m.schema_versions), new_schema.json(), MetaStore.now())
-            ]
-            current = new_schema
-        current_version = (m.schema_versions + schema_added)[-1].version
         stored_schema = _with_deleted(current)
 
         # -- stage: mark deletes, coerce to table schema
@@ -416,7 +426,6 @@ class LakeTable:
             stored_schema,
         ).withColumn("_bucket", bucket_expr(m.effective_bucket_columns, m.n_buckets))
 
-        obs_out = Observation()
         snap_rel = f"data/snap-{m.version + 1:06d}-{uuid.uuid4().hex[:8]}"
         persisted = None
         part_cols = ["_bucket", "_salt"]
@@ -440,48 +449,29 @@ class LakeTable:
             ).withColumn("_salt", salt_expr(n_salt, *keys))
             # ONE exchange by (bucket, salt) + sort resolves intra-batch
             # duplicates AND batch-vs-target conflicts, pre-clustered
-            # for the bucket-partitioned write (no second shuffle).
-            merged = dedup_last_writer_colocated(unioned, keys, order_cols, part_cols)
-            out_rows = merged.observe(
-                obs_out,
-                F.sum(F.col("_src").cast("long")).alias("from_batch"),
+            # for the bucket-partitioned write (no second shuffle). The
+            # batch-side counters ride the same write job.
+            obs_src = Observation()
+            out_rows = dedup_last_writer_colocated(
+                unioned, keys, order_cols, part_cols, stored_schema.names
+            ).observe(
+                obs_src,
+                F.sum(F.col("_src").cast("long")).alias("n"),
                 F.sum((F.col("_src") & F.col(DELETED_COL)).cast("long")).alias("deletes"),
             ).drop("_src")
             tier = BASE
         else:
             # MOR fast path: single exchange+sort straight into the
-            # delta write; the write's output directories reveal the
-            # touched buckets (no probe job).
-            winners = dedup_last_writer_colocated(
+            # delta write; the write's listing reveals the touched
+            # buckets (no probe job).
+            out_rows = dedup_last_writer_colocated(
                 staged.withColumn("_salt", salt_expr(n_salt, *keys)),
-                keys, order_cols, part_cols,
+                keys, order_cols, part_cols, stored_schema.names,
             )
-            # one observation rides the write job carrying EVERYTHING
-            # the manifest needs about the written rows — per-bucket
-            # counts, order-column bounds, stats-column bounds — so no
-            # read-back job is required for delta files (see
-            # _list_snapshot_files). Bounded: n_buckets conditional
-            # sums + 2 aggs per stats column.
-            scols = [c for c in m.stats_columns if c in staged.columns and c != oc]
-            obs_aggs = [
-                F.count(F.lit(1)).alias("from_batch"),
-                F.sum(F.col(DELETED_COL).cast("long")).alias("deletes"),
-                F.min(F.col(oc)).alias("f_lo"),
-                F.max(F.col(oc)).alias("f_hi"),
-                *[x for c in scols for x in (
-                    F.min(F.col(c)).alias(f"_lo_{c}"), F.max(F.col(c)).alias(f"_hi_{c}")
-                )],
-                *[
-                    F.sum((F.col("_bucket") == b).cast("long")).alias(f"_rows_{b}")
-                    for b in range(m.n_buckets)
-                ],
-            ]
-            out_rows = winners.observe(obs_out, *obs_aggs)
             tier = DELTA
 
-        new_files, bucket_rows = self._write_snapshot(
+        new_files, written = self._write_snapshot(
             out_rows.drop("_salt"), snap_rel, current_version, tier, m, pre_clustered=True,
-            batch_stats=(lambda: obs_out.get) if mode == "mor" else None,
         )
         if persisted is not None:
             persisted.unpersist()
@@ -493,7 +483,10 @@ class LakeTable:
             if not touched:
                 return self._commit_empty(m, batch_id, schema_added)
 
-        in_metrics, out_metrics = obs_in.get, obs_out.get
+        in_metrics = obs_in.get
+        batch_metrics = obs_src.get if mode == "cow" else written
+        from_batch = int(batch_metrics["n"] or 0)
+        deletes = int(batch_metrics["deletes"] or 0)
         # all-null / non-integer order columns are legal — watermarks
         # just don't move
         lsn_lo = _as_lsn(in_metrics["lsn_lo"])
@@ -503,12 +496,12 @@ class LakeTable:
             lsn_lo=lsn_lo,
             lsn_hi=lsn_hi,
             rows_in=int(in_metrics["n"]) - n_bad,
-            rows_deduped=int(out_metrics["from_batch"]),
-            rows_upserted=int(out_metrics["from_batch"]) - int(out_metrics["deletes"] or 0),
-            rows_deleted=int(out_metrics["deletes"] or 0),
+            rows_deduped=from_batch,
+            rows_upserted=from_batch - deletes,
+            rows_deleted=deletes,
             touched_buckets=[int(b) for b in touched],
             committed_at=MetaStore.now(),
-            bucket_rows={b: bucket_rows[b] for b in map(str, touched) if b in bucket_rows},
+            bucket_rows={b: n for b, n in written["bucket_rows"].items() if int(b) in touched},
         )
         delta = LogDelta(
             version=m.version + 1,
@@ -597,8 +590,11 @@ class LakeTable:
         try:
             n_bad = int(obs_in.get["n_bad"] or 0)
         except Exception:
-            # a zero-task job (everything filtered) can leave the
-            # observation unpopulated — fall back to counting directly
+            # obs_in sits BELOW the merge's exchange: when that stage
+            # produces no rows, AQE replaces it with an empty relation
+            # and its observation never reports — count directly. (The
+            # write's own observation sits above every exchange, so
+            # _write_snapshot always gets one.)
             n_bad = raw_changes.filter(bad_cond).count()
         if not n_bad:
             return 0
@@ -645,45 +641,54 @@ class LakeTable:
         schema_version: int,
         tier: str,
         m: Manifest,
-        n_salt: int = 4,
+        n_buckets: int | None = None,
         pre_clustered: bool = False,
         sort_by: list[str] | None = None,
         drop_after_sort: list[str] | None = None,
-        batch_stats=None,
-    ) -> tuple[dict[str, list], dict[str, int]]:
-        """Write rows (must carry _bucket) as per-bucket parquet under
-        snap_rel, then collect per-file stats (row count, order-column
-        min/max) with ONE distributed job that scans only that column
-        of the just-written files — executors do the footer/column
-        work, the driver receives O(#files) rows. No driver-side
-        directory listing or local footer parsing, so any
-        Hadoop-compatible root (s3a://, gs://) works.
+    ) -> tuple[dict[str, list], dict]:
+        """The one path from a write to manifest entries. Writes rows
+        (must carry _bucket in [0, ``n_buckets``), default the
+        manifest's count) as per-bucket parquet under the writer-private
+        ``snap_rel`` and returns ``(files, written)``: manifest entries
+        per bucket, and the write's metrics — ``n`` rows, ``deletes``
+        (tombstones), ``bucket_rows`` per bucket.
 
-        ``batch_stats``: zero-extra-job stats for DELTA appends — a
-        callable (evaluated after the write job, so it may read an
-        Observation that rode it) returning the write's metrics:
-        per-bucket row counts plus batch-level order/stats-column
-        bounds. Per-file bounds degrade to the batch's — sound
-        (conservative) for pruning, and free of information in the
-        windowed-ingest case, where one batch IS one LSN window so
-        every file of the batch spans the same range anyway. Exact
-        per-file bounds only pay off for compaction-sorted BASE
-        files, which keep the distributed stats scan.
+        The metrics come from ONE Observation riding the write job (no
+        read-back job); the file names come from ONE prefix listing of
+        the snapshot directory through the table's FileSystem — never
+        a directory probe, which object stores answer "absent".
+        Each file entry carries the write's batch-level order/stats
+        bounds. They are sound (conservative) for pruning everywhere,
+        and tight only for MOR DELTA appends, whose rows are one LSN
+        window. BASE rewrites (COW merge, plain fold, ``overwrite_full``,
+        ``rebucket``) hold rows from the whole history, so every file
+        gets the write-wide range and prunes less. Only layout rewrites
+        (``sort_by``) pay one extra scan of the listed files for exact
+        per-file bounds — narrow file ranges are their whole point.
 
-        When not pre-clustered, repartition by (bucket, salt) — a hot
-        key spreads over n_salt tasks while partitionBy keeps layout
-        per-bucket — and sort with a leading _bucket so the
-        dynamic-partition writer doesn't inject its own sort (key order
-        in-file gives parquet min/max row-group skipping)."""
+        "Wrote nothing" is an empty listing AND zero observed rows.
+        Observed rows whose bucket the listing cannot see raise here,
+        before any commit point: committing would mark the batch
+        applied with its rows lost.
+
+        Layout: pre-clustered input is already exchanged+sorted by
+        (_bucket, _salt, keys). ``sort_by`` RANGE-partitions on the
+        sort key so each file owns a disjoint range. Otherwise rows
+        repartition by (bucket, salt) — a hot key spreads over N_SALT
+        tasks while partitionBy keeps layout per-bucket — and sort with
+        a leading _bucket so the dynamic-partition writer doesn't
+        inject its own sort (key order in-file gives parquet min/max
+        row-group skipping)."""
         snap_dir = os.path.join(self.store.root, snap_rel)
         keys = m.key_columns
+        # the order column whose min/max powers manifest-level file
+        # skipping in changes_since: LSN ranges are narrow per delta
+        # file (one batch), so skipping is effective; key-column ranges
+        # would not be (keys are hash-sprayed across files by design).
+        oc = m.order_columns[-1]
         if pre_clustered:
-            out = df  # already exchanged+sorted by (_bucket, _salt, keys)
+            out = df
         elif sort_by:
-            # layout-optimizing rewrite (compaction): RANGE-partition on
-            # the sort key so each file owns a DISJOINT key range —
-            # that's what makes file-level min/max stats actually prune
-            # (hash-salted partitions would each span the full range).
             # Explicit partition count: an AQE-coalesced single output
             # file would leave nothing to prune.
             n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
@@ -697,127 +702,95 @@ class LakeTable:
                 out = out.drop(*drop_after_sort)
         else:
             out = (
-                df.withColumn("_salt", salt_expr(n_salt, *keys))
+                df.withColumn("_salt", salt_expr(N_SALT, *keys))
                 .repartition(F.col("_bucket"), F.col("_salt"))
                 .drop("_salt")
                 .sortWithinPartitions("_bucket", *keys)
             )
+        # observed AFTER any exchange, so only the write job feeds it
+        # (a range partitioner's sampling job would count rows twice).
+        # Bounded: n_buckets conditional sums + 2 aggs per stats column.
+        scols = [c for c in m.stats_columns if c in out.columns and c != oc]
+        obs = Observation()
+        out = out.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col(DELETED_COL).cast("long")).alias("deletes"),
+            F.min(F.col(oc)).alias("_lo"),
+            F.max(F.col(oc)).alias("_hi"),
+            *[x for c in scols for x in (
+                F.min(F.col(c)).alias(f"_lo_{c}"), F.max(F.col(c)).alias(f"_hi_{c}")
+            )],
+            *[
+                F.sum((F.col("_bucket") == b).cast("long")).alias(f"_rows_{b}")
+                for b in range(n_buckets or m.n_buckets)
+            ],
+        )
         out.write.partitionBy("_bucket").parquet(snap_dir, mode="errorifexists")
+        met = obs.get
+        bucket_rows = {
+            k[len("_rows_"):]: int(v) for k, v in met.items() if k.startswith("_rows_") and v
+        }
 
-        if batch_stats is not None:
-            if not self.store.fs.exists(snap_dir):
-                return {}, {}  # every row filtered: no directory, no files
-            try:
-                met = batch_stats() or {}
-            except Exception:
-                met = {}  # zero-task plans can leave the observation empty
-            if met:
-                files, rows = self._list_snapshot_files(
-                    snap_rel, schema_version, tier, m, met
-                )
-                # a non-empty write whose files the FS listing cannot
-                # see (exotic FileSystem impl) falls through to the
-                # read-back scan rather than committing an empty set
-                if files:
-                    return files, rows
+        listed: dict[str, list[str]] = {}
+        for path in sorted(self.store.fs.walk_files(snap_dir)):
+            part, _, name = path[len(snap_dir) + 1:].partition("/")
+            if (
+                part.startswith("_bucket=") and name.endswith(".parquet")
+                and not name.startswith((".", "_"))
+            ):
+                listed.setdefault(part[len("_bucket="):], []).append(f"{snap_rel}/{part}/{name}")
+        unseen = sorted(set(bucket_rows) - set(listed), key=int)
+        if unseen:
+            raise RuntimeError(
+                f"{snap_rel}: wrote rows to bucket(s) {unseen} but the listing "
+                f"of {snap_dir} shows no files there; refusing to commit"
+            )
 
-        # the order column whose min/max powers manifest-level file
-        # skipping in changes_since: LSN ranges are narrow per delta
-        # file (one batch), so skipping is effective; key-column ranges
-        # would not be (keys are hash-sprayed across files by design).
-        oc = m.order_columns[-1]
-        stored = df.drop(*drop_after_sort).schema if drop_after_sort else df.schema
-        try:
-            back = self.spark.read.schema(stored).parquet(snap_dir)
-        except AnalysisException:
-            # ONLY a genuinely absent path (a write whose every row was
-            # filtered never creates the directory) maps to "no files
-            # were written". Any other failure must propagate BEFORE
-            # the commit point — a bare except here once conflated a
-            # transient read error with an empty write, committing the
-            # batch id with zero files and losing the rows permanently
-            # (replay blocked by exactly-once).
-            if self.store.fs.exists(snap_dir):
-                raise
-            return {}, {}
-        oc_col = F.col(oc) if oc in back.columns else F.lit(None)
-        scols = [c for c in m.stats_columns if c in back.columns and c != oc]
+        bounds = {oc: (met["_lo"], met["_hi"])}
+        bounds.update({c: (met[f"_lo_{c}"], met[f"_hi_{c}"]) for c in scols})
+        per_file = {}
+        if sort_by and listed:
+            per_file = self._file_bounds(m, snap_rel, listed, [oc, *scols])
+
+        def entry(relpath: str) -> list:
+            fb = per_file.get(relpath, bounds)
+            lo, hi = fb.get(oc, (None, None))
+            e = [relpath, schema_version, tier, _json_safe(lo), _json_safe(hi)]
+            if m.stats_columns:
+                e.append({
+                    c: [_stat_safe(v) for v in fb.get(c, (None, None))]
+                    for c in m.stats_columns if c in fb
+                })
+            return e
+
+        files = {b: [entry(p) for p in paths] for b, paths in listed.items()}
+        return files, {"n": int(met["n"]), "deletes": int(met["deletes"] or 0),
+                       "bucket_rows": bucket_rows}
+
+    def _file_bounds(
+        self, m: Manifest, snap_rel: str, listed: dict[str, list[str]], cols: list[str]
+    ) -> dict[str, dict]:
+        """Exact per-file bounds of ``cols`` over the listed files: one
+        distributed scan of only those columns — executors do the
+        footer/column work, the driver receives O(#files) rows."""
+        back = self.spark.read.schema(
+            T.StructType([f for f in self.schema(m).fields if f.name in cols])
+        ).parquet(*[os.path.join(self.store.root, p) for ps in listed.values() for p in ps])
         stats = (
-            back.select(
-                F.input_file_name().alias("_file"),
-                F.col("_bucket").cast("string").alias("_b"),
-                oc_col.alias("_oc"),
-                *[F.col(c) for c in scols],
-            )
-            .groupBy("_file", "_b")
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.min("_oc").alias("_lo"),
-                F.max("_oc").alias("_hi"),
-                *[x for c in scols for x in (
-                    F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")
-                )],
-            )
+            back.groupBy(F.input_file_name().alias("_file"))
+            .agg(*[
+                x for c in cols for x in (F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}"))
+            ])
             .collect()
         )
         marker = "/" + snap_rel + "/"
-        files: dict[str, list] = {}
-        rows: dict[str, int] = {}
-        for r in sorted(stats, key=lambda r: r["_file"]):
-            idx = r["_file"].find(marker)
-            relpath = r["_file"][idx + 1:] if idx >= 0 else r["_file"]
-            entry = [relpath, schema_version, tier, _json_safe(r["_lo"]), _json_safe(r["_hi"])]
-            if scols or m.stats_columns:
-                col_stats = {
-                    c: [_stat_safe(r[f"_lo_{c}"]), _stat_safe(r[f"_hi_{c}"])]
-                    for c in scols
-                }
-                if oc in m.stats_columns:
-                    col_stats[oc] = [_stat_safe(r["_lo"]), _stat_safe(r["_hi"])]
-                entry.append(col_stats)
-            files.setdefault(r["_b"], []).append(entry)
-            rows[r["_b"]] = rows.get(r["_b"], 0) + r["_n"]
-        return files, rows
-
-    def _list_snapshot_files(
-        self, snap_rel: str, schema_version: int, tier: str, m: Manifest, met: dict
-    ) -> tuple[dict[str, list], dict[str, int]]:
-        """Manifest entries for a just-written DELTA snapshot from the
-        write job's own observation plus an O(batch-files) listing of
-        the (writer-private, uuid-named) snapshot directory — replaces
-        the per-batch distributed read-back job on the MOR hot path
-        (measured ~0.25 s of a 1.5 s 1M-event merge). Every file entry
-        carries the BATCH's order/stats bounds; per-bucket row counts
-        come from the observation's conditional sums."""
-        fs = self.store.fs
-        snap_dir = os.path.join(self.store.root, snap_rel)
-        oc = m.order_columns[-1]
-        lo, hi = _json_safe(met.get("f_lo")), _json_safe(met.get("f_hi"))
-        col_stats = {
-            c: [_stat_safe(met[f"_lo_{c}"]), _stat_safe(met[f"_hi_{c}"])]
-            for c in m.stats_columns
-            if f"_lo_{c}" in met
+        return {
+            r["_file"][r["_file"].find(marker) + 1:]: {
+                c: (r[f"_lo_{c}"], r[f"_hi_{c}"]) for c in cols
+            }
+            for r in stats
         }
-        if oc in m.stats_columns:
-            col_stats[oc] = [_stat_safe(met.get("f_lo")), _stat_safe(met.get("f_hi"))]
-        files: dict[str, list] = {}
-        rows: dict[str, int] = {}
-        for d in sorted(fs.listdir(snap_dir)):
-            if not d.startswith("_bucket="):
-                continue
-            b = d.split("=", 1)[1]
-            entries = []
-            for name in sorted(fs.listdir(f"{snap_dir}/{d}")):
-                if name.startswith((".", "_")) or not name.endswith(".parquet"):
-                    continue
-                entry = [f"{snap_rel}/{d}/{name}", schema_version, tier, lo, hi]
-                if m.stats_columns:
-                    entry.append(dict(col_stats))
-                entries.append(entry)
-            if entries:
-                files[b] = entries
-                rows[b] = int(met.get(f"_rows_{b}", 0) or 0)
-        return files, rows
 
     # ----------------------------------------------------------- utilities
     def overwrite_full(self, df: DataFrame, batch_id: str) -> CommitRecord | None:
@@ -827,17 +800,8 @@ class LakeTable:
         m = self.manifest
         if batch_id in m.applied_batch_ids:
             return None
-        keys = m.key_columns
         oc = m.order_columns[-1]
-        current = self.schema(m)
-        new_schema = evolve_schema(current, df.schema)
-        schema_added: list[SchemaVersion] = []
-        if new_schema.json() != current.json():
-            schema_added = [
-                SchemaVersion(len(m.schema_versions), new_schema.json(), MetaStore.now())
-            ]
-            current = new_schema
-        current_version = (m.schema_versions + schema_added)[-1].version
+        current, schema_added, current_version = self._evolve(m, df.schema)
         stored_schema = _with_deleted(current)
 
         obs = Observation()
@@ -847,20 +811,22 @@ class LakeTable:
         )
         staged = dedup_last_writer(
             coerce_to(staged.withColumn(DELETED_COL, F.lit(False)), stored_schema),
-            keys, m.order_columns,
+            m.key_columns, m.order_columns,
         ).withColumn("_bucket", bucket_expr(m.effective_bucket_columns, m.n_buckets))
         snap_rel = f"data/refresh-{m.version + 1:06d}-{uuid.uuid4().hex[:8]}"
-        new_files, bucket_rows = self._write_snapshot(staged, snap_rel, current_version, BASE, m)
-        met = obs.get
+        new_files, written = self._write_snapshot(staged, snap_rel, current_version, BASE, m)
+        # an empty refresh (truncate): obs sits below the dedup exchange
+        # and never reports once AQE prunes the empty stage
+        met = obs.get if written["n"] else {"n": 0, "lsn_lo": None, "lsn_hi": None}
         lsn_lo = _as_lsn(met["lsn_lo"])
         lsn_hi = _as_lsn(met["lsn_hi"])
         rec = CommitRecord(
             batch_id=batch_id,
             lsn_lo=lsn_lo, lsn_hi=lsn_hi,
-            rows_in=int(met["n"]), rows_deduped=sum(bucket_rows.values()),
-            rows_upserted=sum(bucket_rows.values()), rows_deleted=0,
+            rows_in=int(met["n"]), rows_deduped=written["n"],
+            rows_upserted=written["n"], rows_deleted=0,
             touched_buckets=sorted(int(b) for b in new_files),
-            committed_at=MetaStore.now(), bucket_rows=bucket_rows,
+            committed_at=MetaStore.now(), bucket_rows=written["bucket_rows"],
         )
         # every pre-existing bucket empties unless the refresh rewrote it
         replaces = {b: [] for b in m.bucket_files}
@@ -918,23 +884,13 @@ class LakeTable:
                 f"compacted away. Re-sync the consumer from a full read, or "
                 f"call with strict=False to accept missing deletes."
             )
-        paths_by_version = self._files_newer_than(m, lsn_exclusive)
-        stored_current = _with_deleted(self.schema(m))
-        if not paths_by_version:
-            return self.spark.createDataFrame([], stored_current)
-        parts = []
-        for sv, paths in sorted(paths_by_version.items()):
-            stored = _with_deleted(self._schema_at(m, sv))
-            parts.append(coerce_to(self.spark.read.schema(stored).parquet(*paths), stored_current))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
+        df = self._scan(m, self._files_newer_than(m, lsn_exclusive))
         last = m.order_columns[-1]
         # non-integer order columns carry no lsn to compare: the feed
         # degrades to "all rows from non-skippable files" (consumers
         # dedup by key+order) instead of a type-mismatch error
         if not isinstance(
-            stored_current[last].dataType, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
+            df.schema[last].dataType, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
         ):
             return df
         return df.filter(F.col(last) > F.lit(lsn_exclusive))
@@ -976,7 +932,7 @@ class LakeTable:
         )
         snap_rel = f"data/rebucket-{m.version + 1:06d}-{uuid.uuid4().hex[:8]}"
         new_files, _ = self._write_snapshot(
-            df, snap_rel, m.schema_versions[-1].version, BASE, m
+            df, snap_rel, m.schema_versions[-1].version, BASE, m, n_buckets=n_buckets
         )
         replaces = {b: [] for b in m.bucket_files}
         replaces.update(new_files)
@@ -1311,22 +1267,20 @@ class LakeTable:
                 # hot path): raw base∪delta rows exchange ONCE by
                 # (bucket, salt), the colocated window resolves LWW in
                 # the same sort the bucket-partitioned writer needs,
-                # and an observation riding the write supplies the
+                # and _write_snapshot's observation supplies the
                 # manifest stats — no resolve shuffle, no repartition,
                 # no read-back stats job. Layout rewrites (sort_by /
                 # zorder_by) keep the range-partitioned path below,
                 # where exact per-file stats are the point.
-                df = dedup_last_writer_colocated(
-                    self.read(
-                        buckets=targets, include_deleted=True, manifest=m,
-                        resolve=False,
-                    )
-                    .withColumn(
-                        "_bucket", bucket_expr(m.effective_bucket_columns, m.n_buckets)
-                    )
-                    .withColumn("_salt", salt_expr(4, *m.key_columns)),
-                    m.key_columns, m.order_columns, ["_bucket", "_salt"],
+                raw = self.read(
+                    buckets=targets, include_deleted=True, manifest=m, resolve=False
                 )
+                df = dedup_last_writer_colocated(
+                    raw.withColumn(
+                        "_bucket", bucket_expr(m.effective_bucket_columns, m.n_buckets)
+                    ).withColumn("_salt", salt_expr(N_SALT, *m.key_columns)),
+                    m.key_columns, m.order_columns, ["_bucket", "_salt"], raw.columns,
+                ).drop("_salt")
             else:
                 df = self.read(buckets=targets, include_deleted=True, manifest=m)
             if gc_tombstones:
@@ -1369,27 +1323,10 @@ class LakeTable:
 
                 df = with_zorder(df, zorder_by)
                 sort_by, drop_after = ["_zorder"], ["_zorder"]
-            if plain_fold:
-                obs = Observation()
-                scols = [c for c in m.stats_columns if c in df.columns and c != oc]
-                df = df.observe(
-                    obs,
-                    F.min(F.col(oc)).alias("f_lo"),
-                    F.max(F.col(oc)).alias("f_hi"),
-                    *[x for c in scols for x in (
-                        F.min(F.col(c)).alias(f"_lo_{c}"),
-                        F.max(F.col(c)).alias(f"_hi_{c}"),
-                    )],
-                )
-                new_files, _ = self._write_snapshot(
-                    df.drop("_salt"), snap_rel, current_version, BASE, m,
-                    pre_clustered=True, batch_stats=lambda: obs.get,
-                )
-            else:
-                new_files, _ = self._write_snapshot(
-                    df, snap_rel, current_version, BASE, m,
-                    sort_by=sort_by, drop_after_sort=drop_after,
-                )
+            new_files, _ = self._write_snapshot(
+                df, snap_rel, current_version, BASE, m,
+                pre_clustered=plain_fold, sort_by=sort_by, drop_after_sort=drop_after,
+            )
             delta = LogDelta(
                 version=m.version + 1,
                 bucket_replaces={str(b): new_files.get(str(b), []) for b in targets},

@@ -52,40 +52,37 @@ def salt_expr(n_salt: int, *cols: str) -> Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_salt)).cast("int")
 
 
-def payload_tiebreak(df: DataFrame) -> Column:
-    """Deterministic final sort key: xxhash64 over every column. Rows
-    with equal keys AND equal order columns but different payloads
-    would otherwise get a nondeterministic winner (row_number over a
-    non-total order), making replays/retries diverge. Identical rows
-    hash identically, so duplicate delivery still collapses to the
-    same row; distinct payloads get a stable, if arbitrary, winner."""
-    return F.xxhash64(*[F.col(c) for c in df.columns])
+def lww_order(order_cols: list[str], stored_cols: list[str]) -> list[Column]:
+    """THE last-writer-wins sort order (newest first): the order
+    columns desc-nulls-last (null order values lose ties), then
+    xxhash64 over ``stored_cols`` as a payload tiebreak. Rows with
+    equal keys AND equal order columns but different payloads would
+    otherwise get a nondeterministic winner; identical rows hash
+    identically, so duplicate delivery still collapses to the same row.
 
-
-def lww_rank(keys: list[str], order_cols: list[str], tiebreak: Column | None = None) -> Column:
-    """row_number() over keys, newest-writer-first on order_cols, then
-    ``tiebreak`` (pass payload_tiebreak(df) for a total order) — rank 1
-    is the surviving row."""
-    order = [F.col(c).desc_nulls_last() for c in order_cols]
-    if tiebreak is not None:
-        order.append(tiebreak.desc())
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return F.row_number().over(w)
+    Every LWW site (merge, compaction fold, read resolve) passes the
+    table's STORED column names — never derived columns such as
+    ``_bucket``/``_salt``/``_src`` — so all of them pick the same
+    winner. A max over one total order is associative: merging a
+    stream in any cut, then compacting or rebucketing, yields the same
+    rows as one merge of the whole stream."""
+    return [
+        *[F.col(c).desc_nulls_last() for c in order_cols],
+        F.xxhash64(*[F.col(c) for c in stored_cols]).desc(),
+    ]
 
 
 def dedup_last_writer(df: DataFrame, keys: list[str], order_cols: list[str]) -> DataFrame:
-    """Keep exactly one row per key: the last writer by order_cols,
-    ties broken by payload hash (total order → deterministic replay).
+    """Keep exactly one row per key: the first under :func:`lww_order`,
+    with the tiebreak hash over every column of df. Lake-table callers
+    pass frames holding exactly the stored columns, in stored order.
 
     Reference semantics: AGO dup-PK repair (ago/ago.py:1070-1078) and
     the "doubled up" retry reconciliation (ago/ago.py:786-822), done
     set-wise in one shuffle.
     """
-    return (
-        df.withColumn("_rn", lww_rank(keys, order_cols, payload_tiebreak(df)))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    w = Window.partitionBy(*keys).orderBy(*lww_order(order_cols, df.columns))
+    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
 def dedup_last_writer_colocated(
@@ -93,20 +90,18 @@ def dedup_last_writer_colocated(
     keys: list[str],
     order_cols: list[str],
     part_cols: list[str],
+    stored_cols: list[str],
 ) -> DataFrame:
     """LWW dedup when ``part_cols`` is a pure function of ``keys``
     (e.g. (bucket, salt) derived from the key hash): exchange once by
-    part_cols, sort (part_cols, keys, order desc), keep the first row
+    part_cols, sort (part_cols, keys, lww_order), keep the first row
     of each key run via lag — no second shuffle for a downstream
     bucket-partitioned write, and the sort prefix satisfies the
     dynamic-partition writer's required ordering. This halves the
-    shuffles of the merge hot path. The payload-hash tail makes the
-    sort a total order (deterministic winner on order-column ties).
+    shuffles of the merge hot path.
     """
     w = Window.partitionBy(*part_cols).orderBy(
-        *[F.col(k).asc() for k in keys],
-        *[F.col(c).desc_nulls_last() for c in order_cols],
-        payload_tiebreak(df).desc(),
+        *[F.col(k).asc() for k in keys], *lww_order(order_cols, stored_cols)
     )
     prev = [F.lag(F.col(k)).over(w).alias(f"_prev_{k}") for k in keys]
     marked = df.select("*", *prev)
@@ -114,42 +109,6 @@ def dedup_last_writer_colocated(
     for k in keys:
         is_first = is_first | F.col(f"_prev_{k}").isNull() | (F.col(f"_prev_{k}") != F.col(k))
     return marked.filter(is_first).drop(*[f"_prev_{k}" for k in keys])
-
-
-def merge_lww(
-    target: DataFrame,
-    batch: DataFrame,
-    keys: list[str],
-    order_cols: list[str],
-) -> DataFrame:
-    """Merge a change batch into target rows; both sides carry
-    ``_deleted`` and the order columns. Returns the merged rows
-    (tombstones included — caller filters/GCs).
-
-    union + keep-last-writer is correct for every case the reference
-    handles plus the ones it can't:
-    - plain upsert: newer batch row wins over target row
-    - out-of-order update: older-ts batch row LOSES to existing row
-    - delete-then-late-update: tombstone retains (ts, lsn) so a late
-      lower-ts update still loses (impossible to get right without
-      tombstones; the reference's DELETE is destructive and silently
-      resurrects — we keep the stronger semantics)
-    - replayed duplicate events: identical key+order rows collapse to 1
-    """
-    cols = target.columns
-    return dedup_last_writer(
-        target.select(*cols).unionByName(batch.select(*cols)), keys, order_cols
-    )
-
-
-def upsert_only(
-    target: DataFrame, batch: DataFrame, keys: list[str]
-) -> DataFrame:
-    """Blind upsert (batch always wins) — the exact ON CONFLICT DO
-    UPDATE semantics of postgres/postgres.py:551-565 where staging
-    unconditionally overwrites. anti-join + union: one shuffle, batch
-    side broadcast when small (AQE decides)."""
-    return target.join(batch, on=keys, how="left_anti").unionByName(batch)
 
 
 def delete_stale(

@@ -203,29 +203,6 @@ def _bucket_bits(vec_col, n_planes: int, table: int, dim: int | None) -> F.Colum
     return bucket.cast("int")
 
 
-def lsh_buckets(
-    vectors: DataFrame,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    table: int = 0,
-    dim: int | None = None,
-) -> DataFrame:
-    """Random-hyperplane LSH: n_planes sign bits → bucket id (one hash
-    table; ``table`` namespaces the planes so multiple independent
-    tables can be built). Vectors in the same bucket are ANN
-    candidates; search becomes a bucket equi-join, not a cross join.
-    ``dim`` (the max vector length) turns the plane md5s into literal
-    coefficients — see :func:`hyperplane_sign`; resolved with one
-    scalar job when not given."""
-    if dim is None:
-        dim = _max_dim(vectors, vec_col=vec_col)
-    return vectors.select(
-        F.col(id_col).alias("vec_id_out"),
-        _bucket_bits(vec_col, n_planes, table, dim).alias("bucket"),
-    ).withColumnRenamed("vec_id_out", id_col)
-
-
 def _bucket_candidates(
     vectors: DataFrame,
     queries: DataFrame,

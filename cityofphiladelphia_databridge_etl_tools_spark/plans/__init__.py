@@ -51,7 +51,3 @@ def scan_read_schema(df: DataFrame) -> list[str]:
 
 def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
-
-
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")

@@ -8,12 +8,15 @@ deletes + late updates, duplicate delivery, schema evolution,
 crash-resume.
 """
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import types as T
 
 from cityofphiladelphia_databridge_etl_tools_spark import changegen
 from cityofphiladelphia_databridge_etl_tools_spark.lake import LakeTable
+from cityofphiladelphia_databridge_etl_tools_spark.lake.fs import LocalFS
 from cityofphiladelphia_databridge_etl_tools_spark.changegen import TRANSCRIPT_SCHEMA
 
 
@@ -932,3 +935,134 @@ def test_read_race_classifier_is_file_missing_only(spark, tmp_path):
     assert sched.errors >= 1
     assert sched.last_error is boom
     assert sched.races_lost >= 5  # the pre-escalation cycles still counted
+
+
+class DirlessFS(LocalFS):
+    """LocalFS with object-store directory semantics: a directory is
+    not an object, so ``exists``/``is_file`` are false for it,
+    ``makedirs`` does nothing and debris cleanup never removes one."""
+
+    def exists(self, path):
+        return os.path.isfile(path)
+
+    def is_file(self, path):
+        return os.path.isfile(path)
+
+    def makedirs(self, path):
+        pass
+
+    def delete_dir_if_debris(self, path):
+        return False
+
+
+def test_dirless_metadata_fs_keeps_every_row(spark, tmp_path):
+    """Deciding "wrote nothing" from a directory probe committed MOR
+    batches and compactions with zero files under object-store
+    semantics — the rows vanished and the batch id blocked replay."""
+    t = make_table(spark, tmp_path)
+    t.store.fs = DirlessFS()
+    full = changegen.changes(spark, 3000, seed=41)
+    for k, mode in enumerate(["mor", "cow", "mor"]):
+        batch = full.filter((F.col("lsn") >= k * 1000) & (F.col("lsn") < (k + 1) * 1000))
+        rec = t.merge_batch(batch, f"b{k}", mode=mode)
+        assert rec.rows_in == 1000 and rec.touched_buckets, rec
+    expected = changegen.expected_final_state(full)
+    assert_df_equal(t.read(), expected)
+    t.compact()
+    assert all(
+        len(es) == 1 and es[0][2] == "base" for es in t.manifest.bucket_files.values()
+    )
+    assert_df_equal(t.read(), expected)
+
+
+def _tie_batch(spark, variant, n_keys=200):
+    """n_keys rows whose (key, ts, lsn) repeat across variants while
+    the payload differs — only the tiebreak hash picks the winner."""
+    rows = [
+        (f"c{k:04d}", 0, "user", f"text-{variant}-{k}", None, k, k, "U")
+        for k in range(n_keys)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, tool string, "
+        "ts_s long, lsn long, op string",
+    ).withColumn("ts", F.timestamp_seconds("ts_s")).drop("ts_s")
+
+
+def test_maintenance_keeps_tie_winners(spark, tmp_path):
+    """compact() once hashed _bucket/_salt into its tiebreak while
+    read() hashed the stored columns only, so equal-(key, ts, lsn)
+    rows flipped to a different visible row on compaction."""
+    t = make_table(spark, tmp_path)
+    t.merge_batch(_tie_batch(spark, 0), "tie-0")
+    t.merge_batch(_tie_batch(spark, 1), "tie-1")
+    before = sorted(t.read().collect())
+    assert len(before) == 200
+    t.compact()
+    assert sorted(t.read().collect()) == before
+    t.rebucket(5)
+    assert sorted(t.read().collect()) == before
+
+
+def test_unlisted_snapshot_refuses_to_commit(spark, tmp_path):
+    """Observed rows whose files the listing cannot see raise before
+    the commit point: the batch id stays unapplied, so a replay on a
+    healthy listing still lands every row."""
+
+    class BlindListing(DirlessFS):
+        def walk_files(self, path):
+            return [] if os.path.basename(path).startswith("snap-") else super().walk_files(path)
+
+    t = make_table(spark, tmp_path)
+    t.store.fs = BlindListing()
+    stream = changegen.changes(spark, 500, seed=43)
+    with pytest.raises(RuntimeError, match="refusing to commit"):
+        t.merge_batch(stream, "b0")
+    assert "b0" not in t.manifest.applied_batch_ids
+    assert t.manifest.bucket_files == {}
+    t.store.fs = DirlessFS()
+    assert t.merge_batch(stream, "b0") is not None
+    assert_df_equal(t.read(), changegen.expected_final_state(stream))
+
+
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_writes_of_nothing_commit_empty(spark, tmp_path, monkeypatch, mode):
+    """A merge that writes no rows — an empty lsn window, a
+    zero-partition frame, an all-bad batch under dead_letter — commits
+    through _commit_empty: its batch id is applied and no file enters
+    the manifest. A tombstone GC and a full refresh that write nothing
+    leave every bucket empty."""
+    t = make_table(spark, tmp_path, n_buckets=4)
+    t.store.fs = DirlessFS()
+    empties = []
+    real = t._commit_empty
+    monkeypatch.setattr(t, "_commit_empty", lambda *a: empties.append(a[1]) or real(*a))
+    stream = changegen.changes(spark, 500, seed=47)
+    batches = {
+        "window": stream.filter(F.col("lsn") < 0),
+        "zero-part": spark.createDataFrame([], stream.schema),
+        "all-bad": stream.withColumn("op", F.lit("X")),
+    }
+    for bid, batch in batches.items():
+        rec = t.merge_batch(batch, bid, mode=mode, on_bad_rows="dead_letter")
+        assert (rec.rows_in, rec.touched_buckets) == (0, []), bid
+    assert empties == list(batches)
+    assert all(bid in t.manifest.applied_batch_ids for bid in batches)
+    assert t.manifest.bucket_files == {}
+    captured = spark.read.parquet(str(tmp_path / "transcripts" / "_errors" / "*"))
+    assert captured.count() == 500
+
+    # tombstone every key (each delete copies an event with a later
+    # lsn), then GC them all: the fold writes nothing
+    t.merge_batch(stream, "full", mode=mode)
+    t.merge_batch(stream.withColumn("op", F.lit("D")).withColumn("lsn", F.col("lsn") + 10_000),
+                  "del", mode=mode)
+    t.compact(gc_tombstones=True)
+    assert not any(t.manifest.bucket_files.values())
+    assert t.read(include_deleted=True).count() == 0
+
+    t.merge_batch(stream, "again", mode=mode)
+    rec = t.overwrite_full(spark.createDataFrame([], TRANSCRIPT_SCHEMA), "truncate")
+    assert (rec.rows_in, rec.touched_buckets) == (0, [])
+    assert not any(t.manifest.bucket_files.values())
+    assert t.read().count() == 0

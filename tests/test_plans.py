@@ -61,7 +61,8 @@ def test_mor_merge_is_single_exchange(spark, tmp_path):
         "_salt", salt_expr(4, "conv_id", "turn_idx")
     )
     winners = dedup_last_writer_colocated(
-        staged, ["conv_id", "turn_idx"], ["ts", "lsn"], ["_bucket", "_salt"]
+        staged, ["conv_id", "turn_idx"], ["ts", "lsn"], ["_bucket", "_salt"],
+        _with_deleted(t.schema()).names,
     )
     assert count_exchanges(winners) == 1, formatted_plan(winners)
 
